@@ -729,11 +729,6 @@ MINF_WALK_STEPS = 3
 STBL_WALK_STEPS = 2
 
 
-def _hx_str4(hx, pos):
-    """Hex of the 4 bytes at 1-indexed byte position ``pos``."""
-    return F.substring(hx, pos * 2 - 1, F.lit(8))
-
-
 def _codegen_barrier(df: DataFrame, tag: str) -> DataFrame:
     """1:1 ``explode(array(1))`` Generate that stops CollapseProject
     from fusing adjacent walk stages into one Project: the full r11
@@ -753,17 +748,6 @@ def _codegen_barrier(df: DataFrame, tag: str) -> DataFrame:
     ops) for zero benefit — callers end in an explicit select that
     never carries the tags."""
     return df.withColumn(tag, F.explode(F.array(F.lit(1))))
-
-
-def _idiv(num, den):
-    """Exact nonnegative-long integer division as columns: num - num%den
-    is an exact multiple of den, and an IEEE double division whose
-    operands and quotient are all exactly-representable integers
-    (< 2^53 here: num <= 2^32 * 10^6 ~ 4.3e15) returns the quotient
-    EXACTLY, so the cast back to long is lossless — unlike
-    floor(num/den), whose 0.5-ulp rounding at ~1e15 magnitudes can
-    cross an integer boundary on hostile header values."""
-    return ((num - num % den) / den).cast("long")
 
 
 # --- SQL-string expression builders for the container walks (r16,
@@ -827,7 +811,13 @@ def _sx_le32(pos: str) -> str:
 
 
 def _sx_idiv(num: str, den: str) -> str:
-    """String form of :func:`_idiv` (same exact-integer discipline)."""
+    """Exact nonnegative-long integer division: num - num%den is an
+    exact multiple of den, and an IEEE double division whose operands
+    and quotient are all exactly-representable integers (< 2^53 here:
+    num <= 2^32 * 10^6 ~ 4.3e15) returns the quotient EXACTLY, so the
+    cast back to long is lossless — unlike floor(num/den), whose
+    0.5-ulp rounding at ~1e15 magnitudes can cross an integer boundary
+    on hostile header values."""
     return f"CAST(((({num}) - (({num}) % ({den}))) / ({den})) AS BIGINT)"
 
 
@@ -1337,11 +1327,6 @@ def sniff_container_meta(
     )
 
 
-def _hex_le24(c):
-    return F.concat(_hex2(c % 256), _hex2(F.floor(c / 256) % 256),
-                    _hex2(F.floor(c / 65536) % 256))
-
-
 # --- SQL-string hex WRITERS (r16): synth_container_blob's Column-built
 # body cost ~0.7 s of py4j roundtrips per plan build (the _sx_* reader
 # rationale, writer side). Same expressions as the _hex* helpers above,
@@ -1380,14 +1365,6 @@ def _shex_le24(c: str) -> str:
         f"{_shex2(f'FLOOR(({c}) / 256) % 256')}, "
         f"{_shex2(f'FLOOR(({c}) / 65536) % 256')})"
     )
-
-
-def _hex_le32f(c):
-    """Alias of :func:`_hex_le32`, retained from r10 when the image
-    writer truncated values >= 2^16 and containers needed a separate
-    full writer; since the r11 constants audit BOTH are the same full
-    4-byte little-endian writer (VERDICT r10 #8)."""
-    return _hex_le32(c)
 
 
 def synth_container_blob(

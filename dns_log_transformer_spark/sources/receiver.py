@@ -9,8 +9,9 @@ read_firehose_stream) tails the landing directory.
 Reproduced reference behavior:
 - `POST /endpoint` with the Firehose ack contract: 200
   {requestId, timestamp} on accept (app/app.py:99-102); 400 with
-  errorMessage on a non-JSON content type (app/app.py:69-74) or an
-  unparseable body;
+  errorMessage on a non-JSON content type (app/app.py:69-74), an
+  unparseable or non-object body, or a non-integer or negative
+  Content-Length (nothing is landed for any 400);
 - `GET /health` -> 200 (app/app.py:265-267).
 
 Deliberate upgrade (documented for parity review): the reference acks
@@ -50,6 +51,16 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(payload)
 
+    def _reject(self, message: str) -> None:
+        self._send(
+            400,
+            {
+                "requestId": "unknown",
+                "timestamp": _now_ms(),
+                "errorMessage": message,
+            },
+        )
+
     def do_GET(self):
         if self.path == "/health":
             self.send_response(200)
@@ -65,30 +76,27 @@ class _Handler(BaseHTTPRequestHandler):
         ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
         if ctype != "application/json":
             # mirror of app/app.py:69-74
-            self._send(
-                400,
-                {
-                    "requestId": "unknown",
-                    "timestamp": _now_ms(),
-                    "errorMessage": "Content-Type must be application/json",
-                },
-            )
+            self._reject("Content-Type must be application/json")
             return
-        length = int(self.headers.get("Content-Length") or 0)
+        # fail closed on bad framing, before reading: a hostile length
+        # must neither crash the handler nor block in rfile.read(-1)
+        try:
+            length = int(self.headers.get("Content-Length") or 0)
+        except ValueError:
+            length = -1
+        if length < 0:
+            self._reject("Content-Length must be a non-negative integer")
+            return
         raw = self.rfile.read(length)
         try:
             body = json.loads(raw)
-            request_id = body.get("requestId", "unknown")
         except (json.JSONDecodeError, UnicodeDecodeError):
-            self._send(
-                400,
-                {
-                    "requestId": "unknown",
-                    "timestamp": _now_ms(),
-                    "errorMessage": "request body is not valid JSON",
-                },
-            )
+            self._reject("request body is not valid JSON")
             return
+        if not isinstance(body, dict):
+            self._reject("request body must be a JSON object")
+            return
+        request_id = body.get("requestId", "unknown")
         # land durably, THEN ack: tmp-write + fsync + atomic rename so the
         # file stream never sees a partial file and an acked batch is never
         # lost (the reference's at-most-once hole, app/app.py:96-102)

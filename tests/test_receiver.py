@@ -4,10 +4,13 @@ lines), with the receiver's gates mirroring app/app.py:60-102."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import os
 import urllib.error
 import urllib.request
+
+import pytest
 
 from dns_log_transformer_spark.sources import FirehoseReceiver
 from dns_log_transformer_spark.streaming import start_pipeline
@@ -66,3 +69,44 @@ def test_receiver_to_pipeline(spark, tmp_path):
         q.awaitTermination(timeout=120)
     rows = spark.read.parquet(os.path.join(work, "archive")).orderBy("line_no").collect()
     assert [r["line"] for r in rows] == expected_bind9_lines(rec, "@0x000000000000")
+
+
+def _post_framed(port: int, content_length: str, body: bytes = b""):
+    """POST with a hand-set Content-Length (urllib always computes its
+    own); returns (status, decoded JSON body)."""
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+    try:
+        conn.putrequest("POST", "/endpoint")
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", content_length)
+        conn.endheaders()
+        if body:
+            conn.send(body)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read() or b"{}")
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize(
+    "content_length, body",
+    [
+        ("abc", b"{}"),  # non-integer length
+        ("-1", b""),  # negative length: must not read until hang-up
+        ("2", b"[]"),  # JSON array body
+        ("5", b'"abc"'),  # JSON string body
+    ],
+    ids=["non_integer_length", "negative_length", "array_body", "string_body"],
+)
+def test_receiver_rejects_bad_framing(tmp_path, content_length, body):
+    landing = str(tmp_path / "landing")
+    rx = FirehoseReceiver(landing, host="127.0.0.1").start()
+    try:
+        code, resp = _post_framed(rx.port, content_length, body)
+        assert code == 400
+        assert resp["requestId"] == "unknown"
+        assert resp["errorMessage"]
+        # nothing landed, not even a .tmp file
+        assert os.listdir(landing) == []
+    finally:
+        rx.stop()

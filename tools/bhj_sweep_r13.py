@@ -20,7 +20,7 @@ second decade read 11.9x instead of ~5x. Re-run after adding any join
 whose both sides grow with the corpus.
 
 Usage: python tools/bhj_sweep_r13.py [--run]
-Requires scratch/x100 (tools/scale100_r9.py builds it).
+Requires scratch/x100 (`python tools/scale.py --factor 100` builds it).
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ import __spark_entry__ as entry_mod  # noqa: E402
 
 from dns_log_transformer_spark.operators.caching import release_all  # noqa: E402
 from dns_log_transformer_spark.session import get_spark  # noqa: E402
-from tools.scale100_r9 import DST100  # noqa: E402
+from tools.scale import DST100  # noqa: E402
 
 
 def main() -> int:

@@ -16,8 +16,8 @@ import __spark_entry__ as em  # noqa: E402
 
 from dns_log_transformer_spark.operators.caching import release_all  # noqa: E402
 from dns_log_transformer_spark.session import get_spark  # noqa: E402
+from tools.scale import DST100 as X100  # noqa: E402
 
-X100 = "/root/repo/scratch/x100"
 REMAINING = [
     "emb_source_drift", "mm_resize", "sim_ann_ivf_topk", "sim_ann_lsh_topk",
     "sim_int8_rerank", "sim_int8_topk", "sim_ivfpq_topk",

@@ -13,12 +13,14 @@ compaction_due census -> maybe_compact (threshold crossed -> compacts)
 -> identical replay-probe on the compacted store. Results go into the
 PLANS.md round-12 notes next to the winnow 14.21 -> 1.83 s row.
 
-Run from the repo root; requires scratch/x10 (tools/scale10_r5.py) and
+Run from the repo root; requires scratch/x10 (`python tools/scale.py
+--factor 10` builds it) and
 scratch/stream100 (tools/scale100_r10_stream.py).
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -33,8 +35,9 @@ from dns_log_transformer_spark.streaming.compact import (  # noqa: E402
 from dns_log_transformer_spark.streaming.neardup_index import (  # noqa: E402
     neardup_merge_batch,
 )
+from tools.scale import DST10  # noqa: E402
 
-X10_DOCS = "/root/repo/scratch/x10/documents.parquet"
+X10_DOCS = os.path.join(DST10, "documents.parquet")
 STORE = "/root/repo/scratch/stream100"
 
 

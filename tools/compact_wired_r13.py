@@ -10,11 +10,13 @@ record every batch's merge wall time. What the row must show:
   accumulate (the r11 two-decade growth term);
 - both runs emit IDENTICAL pairs (compaction changed files, not rows).
 
-Run from the repo root; requires scratch/x10 (tools/scale10_r5.py).
+Run from the repo root; requires scratch/x10 (`python tools/scale.py
+--factor 10` builds it).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
@@ -29,8 +31,9 @@ from dns_log_transformer_spark.streaming.neardup_index import (  # noqa: E402
     neardup_merge_batch,
     read_pairs,
 )
+from tools.scale import DST10  # noqa: E402
 
-X10_DOCS = "/root/repo/scratch/x10/documents.parquet"
+X10_DOCS = os.path.join(DST10, "documents.parquet")
 BATCHES = 20
 BATCH_ROWS = 500
 

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for named queries to plans/r15/.
+"""Dump `.explain("formatted")` for named queries to plans/<subdir>/.
 
 Usage:
-  python tools/dump_plan_r15.py before dedup_blocking_tradeoff ...
-  python tools/dump_plan_r15.py after  dedup_blocking_tradeoff ...
+  python tools/dump_plan.py <plans-subdir> <tag> <query> [<query> ...]
+  e.g. python tools/dump_plan.py r16 before dedup_blocking_tradeoff
+       python tools/dump_plan.py r16 after  dedup_blocking_tradeoff
 
-Writes plans/r15/<query>_<tag>.txt. The physical plan is the STATIC
+Writes plans/<plans-subdir>/<query>_<tag>.txt, built against
+SPARK_GRAFT_SF_DIR (default sf0.1). The physical plan is the STATIC
 plan (AdaptiveSparkPlan isFinalPlan=false) — the same artifact the
 broadcast lint audits; Exchange counts / join strategies / PushedFilters
 are all visible in it.
@@ -16,21 +18,24 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
-def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def main() -> int:
+    if len(sys.argv) < 4:
+        print(__doc__.split("\n\n")[1], file=sys.stderr)
+        return 2
+    subdir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
+    from tools.scale import SRC
     from dns_log_transformer_spark.operators.caching import release_all
     from dns_log_transformer_spark.queries import ALL_QUERIES
     from dns_log_transformer_spark.session import get_spark
 
-    spark = get_spark("dump_plan_r15")
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r15")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SRC)
+    spark = get_spark("dump_plan")
+    outdir = os.path.join(REPO, "plans", subdir)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = ALL_QUERIES[name].fn(spark, sf_dir)
@@ -42,7 +47,8 @@ def main() -> None:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} bytes)")
         release_all()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -36,6 +36,7 @@ from dns_log_transformer_spark.broadcast_allowlist import (  # noqa: E402
 )
 from dns_log_transformer_spark.operators.caching import release_all  # noqa: E402
 from dns_log_transformer_spark.session import get_spark  # noqa: E402
+from tools.scale import DST100  # noqa: E402
 
 DEFAULT_FIXTURES = [
     "/root/testdata/sf0.001",
@@ -249,14 +250,13 @@ def main() -> int:
     # FLIPS when the broadcast is gone there, RAN-CLEAN when it
     # persists (these rationales are machine-owned and refresh on
     # every regeneration; hand-written BOUNDED/SCAN-FED survive)
-    x100 = "/root/repo/scratch/x100"
-    if os.path.isdir(x100):
+    if os.path.isdir(DST100):
         for name, entry in out.items():
             if not any(w.startswith("X100") for w in entry.values()):
                 continue
             try:
                 sigs100 = plans.broadcast_sigs(
-                    entry_mod.queries()[name](spark, x100)
+                    entry_mod.queries()[name](spark, DST100)
                 )
             except Exception as ex:  # noqa: BLE001 — replica lacks a table
                 print(f"X100 SKIP {name}: {str(ex).splitlines()[0][:100]}")

@@ -4,10 +4,16 @@ and the .xx5 money-percentile rounding divergence, both invisible at
 the gated sf0.01.
 
 Usage: python tools/parity_sweep.py [sf_dir] [--out PATH]
+       python tools/parity_sweep.py [sf_dir] --only <query> [<query> ...]
 (default sf0.001; without --out the checked-in SWEEP_DETAIL_<sf>.json
 is only written when it is already git-dirty or absent — an ad-hoc
 verification run cannot silently clobber a committed round-end record
 (VERDICT r12 #8); pass --out explicitly to overwrite or redirect)
+
+``--only`` runs the same lint + compare loop on the named queries alone
+(seconds instead of a full-registry sweep, for a touched operator),
+prints OK/FAIL per query and writes no sweep detail file. The full
+sweep remains the round-end backstop.
 
 Runs every registered query AND its DuckDB oracle at the given fixture
 and applies the exact driver-style compare (row count + schema +
@@ -39,24 +45,30 @@ from tests.test_oracle_parity import (  # noqa: E402
 )
 
 
+from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
 from tools.artifacts import artifact_writable  # noqa: E402
 
 
 def main() -> int:
+    import argparse
     import json
     import os
     import time
 
-    argv = list(sys.argv[1:])
-    out_path = None
-    if "--out" in argv:
-        i = argv.index("--out")
-        if i + 1 >= len(argv):
-            print("usage: parity_sweep.py [sf_dir] [--out PATH]")
-            return 2
-        out_path = argv[i + 1]
-        del argv[i : i + 2]
-    sf = argv[0] if argv else "/root/testdata/sf0.001"
+    ap = argparse.ArgumentParser(description="Oracle-parity sweep.")
+    ap.add_argument("sf", nargs="?", default=SMOKE_SF_DIR)
+    ap.add_argument("--out", metavar="PATH")
+    ap.add_argument("--only", nargs="+", metavar="query")
+    args = ap.parse_args()
+    sf, out_path = args.sf, args.out
+    queries = entry_mod.queries()
+    if args.only:
+        unknown = [n for n in args.only if n not in queries]
+        if unknown:
+            ap.error(f"unknown queries: {' '.join(unknown)}")
+        if out_path:
+            ap.error("--only writes no sweep detail; drop --out")
+        queries = {n: queries[n] for n in args.only}
     load_start = [round(x, 2) for x in os.getloadavg()]
     spark = get_spark("parity_sweep")
     con = duckdb.connect()
@@ -67,7 +79,7 @@ def main() -> int:
     oracles = entry_mod.oracle_sql()
     bad: list[tuple[str, str]] = []
     timings: dict[str, float] = {}  # Spark-side wall per query (VERDICT r10 #7)
-    for name, fn in sorted(entry_mod.queries().items()):
+    for name, fn in sorted(queries.items()):
         try:
             t0 = time.perf_counter()
             sdf = fn(spark, sf)
@@ -97,10 +109,16 @@ def main() -> int:
             if name in oracles:
                 ddf = con.execute(oracles[name]).df()
                 assert_frames_match(spdf, ddf, name)
+            if args.only:
+                print(f"OK   {name} ({time.perf_counter() - t0:.2f}s)")
         except Exception as ex:  # noqa: BLE001 — report, keep sweeping
             bad.append((name, str(ex).splitlines()[0][:160]))
             release_all()
-    print(f"{sf}: mismatches {len(bad)} / {len(entry_mod.queries())}")
+            if args.only:
+                print(f"FAIL {name} -> {bad[-1][1]}")
+    print(f"{sf}: mismatches {len(bad)} / {len(queries)}")
+    if args.only:
+        return 1 if bad else 0
     for n, m in bad:
         print(f"  {n} -> {m}")
     # per-query sweep timings, slowest first — a merged home that

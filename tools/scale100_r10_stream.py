@@ -1,7 +1,7 @@
 """Two-decade per-batch cost curve for the streaming near-dup index
 (VERDICT r9 #6): grow the accumulated index 1x -> 10x -> 100x
 (0.5k -> 5k -> 50k docs, distinct-content x10 replicas built by
-tools/scale10_r5.py) and time an identical FIXED-size 500-doc probe
+tools/scale.py) and time an identical FIXED-size 500-doc probe
 batch at each decade.
 
 The claim under test: per-batch cost is O(batch + touched bucket
@@ -20,6 +20,7 @@ constant micro-batch shape a crawler actually feeds.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
@@ -30,8 +31,9 @@ from dns_log_transformer_spark.session import get_spark  # noqa: E402
 from dns_log_transformer_spark.streaming.neardup_index import (  # noqa: E402
     neardup_merge_batch,
 )
+from tools.scale import DST10  # noqa: E402
 
-X10_DOCS = "/root/repo/scratch/x10/documents.parquet"
+X10_DOCS = os.path.join(DST10, "documents.parquet")
 WORKDIR = "/root/repo/scratch/stream100"
 PROBE = 500
 
@@ -47,7 +49,7 @@ def main():
         .collect()
     )
     assert len(docs) == 50_000, (
-        f"need 50000 docs, got {len(docs)} — run tools/scale10_r5.py first"
+        f"need 50000 docs, got {len(docs)} — run tools/scale.py --factor 10 first"
     )
 
     def feed(lo, hi, tag):

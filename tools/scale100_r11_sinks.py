@@ -8,7 +8,7 @@ didn't yet have one (VERDICT r10 #6; the near-dup index got its flat
    batch cost O(batch anchors + touched buckets + affected docs'
    anchors), never O(index). Method mirrors the near-dup curve: grow
    the accumulated index 0.5k -> 5k -> 50k docs (distinct-content x10
-   replica corpus, tools/scale10_r5.py) with filler batches, and time
+   replica corpus, tools/scale.py) with filler batches, and time
    an identical FIXED 500-doc probe batch at each decade.
 
 2. ``mv_sink`` (streaming/mv_sink.py) — scale risks: (a) the per-epoch
@@ -20,11 +20,13 @@ didn't yet have one (VERDICT r10 #6; the near-dup index got its flat
    off-the-hot-path cost is measured, not guessed.
 
 Run from the repo root (builds nothing; requires scratch/x10 from
-tools/scale10_r5.py). Results recorded in PLANS.md round-11 notes.
+`python tools/scale.py --factor 10`). Results recorded in PLANS.md
+round-11 notes.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
@@ -42,8 +44,9 @@ from dns_log_transformer_spark.streaming.mv_sink import (  # noqa: E402
 from dns_log_transformer_spark.streaming.winnow_index import (  # noqa: E402
     merge_docs_batch,
 )
+from tools.scale import DST10  # noqa: E402
 
-X10_DOCS = "/root/repo/scratch/x10/documents.parquet"
+X10_DOCS = os.path.join(DST10, "documents.parquet")
 WINNOW_DIR = "/root/repo/scratch/winnow100"
 MV_DIR = "/root/repo/scratch/mv100"
 PROBE = 500
@@ -59,7 +62,7 @@ def winnow_curve(spark) -> None:
         .collect()
     )
     assert len(docs) == 50_000, (
-        f"need 50000 docs, got {len(docs)} — run tools/scale10_r5.py first"
+        f"need 50000 docs, got {len(docs)} — run tools/scale.py --factor 10 first"
     )
 
     def feed(lo, hi, tag):

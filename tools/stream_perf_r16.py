@@ -1,5 +1,6 @@
 """First streaming perf pass (VERDICT r15 #8): one measured row per
-streaming path at 1x (sf0.1) and a 10x replay (scratch/x10 replicas).
+streaming path at 1x (sf0.1) and a 10x replay (scratch/x10 replicas,
+built by `python tools/scale.py --factor 10`).
 
 Paths and claims under test:
 
@@ -31,9 +32,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F  # noqa: E402
 
 from dns_log_transformer_spark.session import get_spark, read_table  # noqa: E402
-
-SRC = "/root/testdata/sf0.1"
-X10 = "/root/repo/scratch/x10"
+from tools.scale import DST10 as X10, SRC  # noqa: E402
 
 
 def _run_available_now(df, name, mode="update"):
